@@ -21,10 +21,12 @@ use.  Contract:
     embed_fn(texts: pd.Series[str]) -> iterable of float32[dim] arrays
     rerank_fn(query: str, texts: pd.Series[str]) -> iterable of floats
 
-e.g. an ONNX MiniLM session's ``run`` wrapped in a closure.  The
-callable executes inside executor Python workers on Arrow-sized batches
+e.g. an ONNX MiniLM session's ``run`` wrapped in a closure.  The chunk
+embedder executes inside executor Python workers on Arrow-sized batches
 (model loads once per worker via lazy init inside the closure — the
-standard pattern).  Defaults remain the deterministic stubs.
+standard pattern); the query embedding and the query-time rerank of the
+≤200 fused candidates run on the driver, one batch call each.  Defaults
+remain the deterministic stubs.
 """
 
 from __future__ import annotations
@@ -90,18 +92,23 @@ def stable_unit_score(query: str, text: str) -> float:
     return int(h[:8], 16) / float(0xFFFFFFFF)
 
 
+def rerank_scores(query: str, texts, rerank_fn=None) -> list[float]:
+    """Q6 rerank scores of ``texts`` for one query in ONE batch call —
+    ``rerank_fn`` (see module docstring contract) or the deterministic
+    stub.  Query-time reranking runs this on the driver over the ≤200
+    fused candidates, like :func:`embed_query`."""
+    t = pd.Series(list(texts), dtype=object).map(lambda x: x if x is not None else "")
+    if rerank_fn is not None:
+        return [float(s) for s in rerank_fn(query, t)]
+    return [stable_unit_score(query, x) for x in t]
+
+
 def make_rerank_udf(query: str, rerank_fn=None):
-    """Q6 rerank scorer for a fixed query — pandas UDF over candidate
-    text.  ``rerank_fn`` (see module docstring contract) swaps in a real
-    cross-encoder; default is the deterministic stub."""
+    """:func:`rerank_scores` as a pandas UDF over a candidate text
+    column, for scoring candidates that live in a distributed frame."""
 
     @pandas_udf(DoubleType())
     def rerank_udf(texts: pd.Series) -> pd.Series:
-        t = texts.map(lambda x: x if x is not None else "")
-        if rerank_fn is not None:
-            return pd.Series(
-                [float(s) for s in rerank_fn(query, t)], index=t.index
-            )
-        return t.map(lambda x: stable_unit_score(query, x))
+        return pd.Series(rerank_scores(query, texts, rerank_fn), index=texts.index)
 
     return rerank_udf

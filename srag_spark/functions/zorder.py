@@ -40,10 +40,13 @@ integration.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MAX_COLS = 4
+_INT_MAX = 2**31 - 1
 _ZBIN = "__zbin"
 
 
@@ -122,7 +125,8 @@ def compute_boundaries(
     # are recorded from the written data), so estimator wobble never
     # changes any query result.
     probs_sql = "array(" + ",".join(repr(p) for p in probs) + ")"
-    acc = max(1 << (bits + 2), int(round(1.0 / rel_err)))
+    # percentile_approx's accuracy is an INT argument
+    acc = min(max(1 << (bits + 2), int(round(1.0 / rel_err))), _INT_MAX)
     row = proj.agg(
         *[
             F.expr(
@@ -145,6 +149,15 @@ def compute_boundaries(
     return out
 
 
+def _double_sql(v: float) -> str:
+    """SQL double literal; ±Infinity and NaN (edges of a column that
+    holds them) have no ``…D`` spelling and are cast from strings."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return f"CAST('{'NaN' if math.isnan(v) else 'Infinity' if v > 0 else '-Infinity'}' AS DOUBLE)"
+
+
 def _bin_search_sql(edges: list[float], x_sql: str) -> str:
     """SQL text of ``#edges <= x`` (the bin index) as a NESTED BINARY
     CASE tree: only ~log2(len(edges)) comparisons are ever evaluated
@@ -162,7 +175,7 @@ def _bin_search_sql(edges: list[float], x_sql: str) -> str:
             return str(lo)
         mid = (lo + hi + 1) // 2
         return (
-            f"(CASE WHEN {x_sql} >= {float(edges[mid - 1])!r}D "
+            f"(CASE WHEN {x_sql} >= {_double_sql(edges[mid - 1])} "
             f"THEN {rec(mid, hi)} ELSE {rec(lo, mid - 1)} END)"
         )
 

@@ -1,19 +1,22 @@
 """Retrieval operators Q1–Q11 (SURVEY.md §2.4), Spark-native.
 
 The reference delegates vector search to Qdrant, lexical search to
-OpenSearch BM25, and fuses in memory (QueryService.scala:95-266).  Here
-every stage is an in-engine DataFrame plan:
+OpenSearch BM25, and fuses the two ≤200-row lists in memory
+(QueryService.scala:95-266).  Here the corpus-sized work is distributed
+and the fusion is, as in the reference, driver-side:
 
-* Q2 exact cosine top-k — native ``zip_with``/``aggregate`` dot product
-  (unit-norm vectors ⇒ cosine), no UDF;
-* Q3 BM25 — two-pass aggregation (corpus stats, then scoring) with
-  broadcast of the tiny per-term idf relation;
-* Q4 RRF fusion — two ``row_number`` ranks + one full-outer join
-  (QueryService.scala:137-167, k=60, pool=200);
-* Q5 candidate-text resolution — left joins + ``coalesce``
+* Q2 exact cosine top-k — one scan with a native ``zip_with``/``aggregate``
+  dot product (unit-norm vectors ⇒ cosine), no UDF;
+* Q3 BM25 — two distributed passes: one global aggregate for the
+  index-wide N, avgdl and per-term idf, then one scan that scores each
+  row locally from its regex hits and takes the top-k with its text;
+* Q4 RRF fusion — on the driver, over the two collected ≤pool (200)
+  ranked lists (QueryService.scala:137-167, k=60);
+* Q5 candidate-text resolution — lexical text, else ONE keyed fetch
+  against the chunks table for the semantic-only candidates
   (QueryService.scala:169-199);
-* Q6/Q7 rerank gate + filtering (QueryService.scala:210-266) — scoring is
-  a pandas UDF (the cross-encoder port), gates are native window/agg math;
+* Q6/Q7 rerank gate + filtering (QueryService.scala:210-266) — one
+  rerank call over ≤200 candidate texts, then the score gates;
 * Q9 listing filter/sort (MainHandlers.scala:62-90), Q10 top-k, Q11
   distinct — trivially native.
 
@@ -21,20 +24,25 @@ Determinism: the reference relies on Scala's stable sort for ties; Spark
 ordering is non-deterministic under ties, so every rank/top-k here adds
 the secondary key ``(doc_id, segment_index)`` (SURVEY.md §4.2.3).
 
-Scale notes: the score relations entering fusion are ≤ pool (200) rows —
-they broadcast.  BM25's idf relation has one row per *query term*, also
-broadcast.  The only big shuffles are the two groupBys over the exploded
-token table, both with map-side partial aggregation.
+Scale notes: a query runs two BM25 passes, one cosine scan and at most
+one keyed text fetch — each a plain scan (plus the tiny global
+aggregate's single-row exchange), no join and no per-query cache.
+Everything after them touches at most 2 × 200 rows, whatever the corpus
+size.  ``rrf_fuse``, ``resolve_candidate_texts`` and ``filter_reranked``
+keep DataFrame signatures as thin adapters over the same driver-side
+code; their outputs are local relations (collecting them is no job).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from srag_spark.functions.embedding import embed_query, make_rerank_udf
+from srag_spark.functions.embedding import embed_query, rerank_scores
+from srag_spark.functions.plan import local_frame
 
 FUSION_POOL_SIZE = 200   # QueryService.scala:65
 RERANKER_POOL_SIZE = 200
@@ -97,17 +105,14 @@ def cosine_topk(
 # Q3 — BM25 lexical top-k, in-engine
 # ---------------------------------------------------------------------------
 LEX_TOKEN_SPLIT = "[^a-z0-9]+"
+_DL_SQL = "CAST(regexp_count(lower(text), '[a-z0-9]+') AS INT)"
 
 
 def tokenize_lex(text: str) -> list[str]:
     """Frozen lexical analyzer (≈ OpenSearch standard analyzer):
-    lowercase, split on non-alphanumeric runs, drop empties.
-    Python twin of the native column expression in :func:`_tokens_col`."""
+    lowercase, split on non-alphanumeric runs, drop empties.  Python
+    twin of the token-run count and regex hits in :func:`bm25_topk`."""
     return [t for t in re.split(LEX_TOKEN_SPLIT, (text or "").lower()) if t]
-
-
-def _tokens_col(col) -> "F.Column":
-    return F.array_remove(F.split(F.lower(col), LEX_TOKEN_SPLIT), "")
 
 
 def bm25_topk(
@@ -118,16 +123,26 @@ def bm25_topk(
     b: float = 0.75,
     flt: dict[str, str] | None = None,
 ) -> DataFrame:
-    """BM25 (Lucene formulation) top-k over the chunks table.
+    """BM25 (Lucene formulation) top-k over the chunks table:
+    (doc_id, segment_index, text, score), score desc.
 
-    Two aggregation passes, both with map-side combine:
-      1. corpus stats: N, avgdl (single tiny row → broadcast);
-      2. per-(chunk, term) tf over the exploded token table, restricted to
-         the query's terms *before* the shuffle (predicate pushed below
-         the explode by Catalyst).
-    idf uses the Lucene/OpenSearch form ln(1 + (N-df+0.5)/(df+0.5)).
+    Two passes, neither with a join, an explode or a grouped shuffle:
+      1. one global aggregate over the UNFILTERED chunks returns N,
+         avgdl and each query term's idf = ln(1 + (N-df+0.5)/(df+0.5))
+         as one row (idf is evaluated JVM-side, so it is bit-identical
+         to a relational plan's);
+      2. one scan of the filtered chunks scores every row locally from
+         its regex hits, with pass 1's values as literals, and keeps
+         the top-k rows that hit at least one term, text included.
     Empty query → all chunks at score 0.0 (zero_terms_query: all,
     OpenSearchAdapter.scala:205-235), deterministic order.
+
+    A hit is one regex match per term occurrence: the alternation of the
+    query terms with lookarounds pinning each match to a maximal
+    [a-z0-9] run, so a hit ≡ a token equal to the term and tf/df/dl are
+    value-identical to an exploded-token form (pinned by the q3 oracle
+    entries; terms are alnum-only, so the alternation is
+    injection-safe).  ``dl`` is the token-run count.
 
     Filtered-scoring semantics (frozen, = OpenSearch): a metadata filter
     restricts the RESULT set but never the SCORING statistics.  N, avgdl
@@ -135,139 +150,131 @@ def bm25_topk(
     scores the ``match`` clause with index-wide stats and puts the
     metadata terms in non-scoring filter context
     (OpenSearchAdapter.scala:205-235 bool.must(match)+bool.filter), so a
-    chunk's score is identical with or without a filter.  The plan pays
-    one exploded-token pass over the full corpus either way (that IS the
-    index-wide df); the filter drops non-matching chunks from the tf
-    relation via a co-keyed semi-join before scoring, so the sort-limit
-    still sees only candidate rows.  Pinned by the ``q3_bm25_filtered``
-    oracle entry (VERDICT r4 #3).
+    chunk's score is identical with or without a filter.  Pinned by the
+    ``q3_bm25_filtered`` oracle entry (VERDICT r4 #3).
     """
     terms = sorted(set(tokenize_lex(query_text)))
+    candidates = apply_metadata_filter(chunks, flt)
     if not terms:
-        base = apply_metadata_filter(chunks, flt).select(*_KEY, "text")
         return (
-            base.select(*_KEY, "text", F.lit(0.0).alias("score"))
+            candidates.select(*_KEY, "text", F.lit(0.0).alias("score"))
             .orderBy(*_KEY)
             .limit(k)
         )
-
-    # r6 evaluation rewrite (guide §2.3/§2.4 — shuffle fewer bytes,
-    # remove shuffles outright): the old shape exploded EVERY token of
-    # every doc and hash-aggregated the survivors into per-(chunk, term)
-    # tf — a corpus-tokens-sized explode feeding a shuffle.  But the
-    # query's term set is tiny and known, so one alternation regex pass
-    # per doc extracts ONLY matching occurrences (``hits`` arrays are
-    # as short as the match count), and tf comes from counting inside
-    # the row — the explode below is over the ≤|terms| distinct matched
-    # terms per doc, and NO groupBy shuffle exists at all.  ``dl`` is a
-    # token-run count (regexp_count of the token alphabet), value-equal
-    # to size(split(...)).  The lookarounds pin each alternative to a
-    # maximal [a-z0-9] run, so a hit ≡ a token equal to the term —
-    # tf/df/dl are value-identical to the exploded form (pinned by the
-    # q3 oracle entries; terms are alnum-only, so the alternation is
-    # injection-safe).  An earlier spread_input here was net-negative
-    # (shuffling full text costs more than the pass it parallelizes);
-    # with the explode gone the scan-shaped pass is cheaper still.
-    alt = "|".join(terms)
-    hit_pat = f"(?<![a-z0-9])({alt})(?![a-z0-9])"
-    # the LIGHT relation (keys + dl + matched occurrences, no text) is
-    # persisted: stats and tf both consume it, which would otherwise be
-    # two full scans + two evaluations of the regex pass.  The text
-    # column deliberately stays OUT of the cached relation (guide §2.3:
-    # decide on lightweight proxies, move payloads once) — the final
-    # fetch joins the ≤k winners back against a plain text scan.
-    from srag_spark.operators.dedup import _persist
-
-    docs = _persist(
-        chunks.select(
-            *_KEY,
-            F.expr(
-                "CAST(regexp_count(lower(text), '[a-z0-9]+') AS INT)"
-            ).alias("dl"),
-            F.expr(
-                f"regexp_extract_all(lower(text), '{hit_pat}', 1)"
-            ).alias("_hits"),
-        ),
-        None,
+    hits_sql = (
+        "regexp_extract_all(lower(text), "
+        f"'(?<![a-z0-9])({'|'.join(terms)})(?![a-z0-9])', 1)"
     )
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    # pass 1: index-wide statistics, one row
+    idf_sql = (
+        "ln(1.0D + (count(1) - CAST(count_if(array_contains(_h, '{t}')) AS DOUBLE)"
+        " + 0.5D) / (CAST(count_if(array_contains(_h, '{t}')) AS DOUBLE) + 0.5D))"
     )
-
-    def _count_of(t_: str):
-        # single-parameter closure: a default-arg form (lambda h, t=t_)
-        # would be bound by pyspark as the BINARY (element, index)
-        # lambda and silently compare against the index column
-        return lambda h: h == F.lit(t_)
-
-    tf_full = (
-        docs.select(
-            *_KEY,
-            "dl",
-            F.explode(
-                F.filter(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(t_).alias("term"),
-                                F.size(
-                                    F.filter(F.col("_hits"), _count_of(t_))
-                                ).cast("double").alias("tf"),
-                            )
-                            for t_ in terms
-                        ]
-                    ),
-                    lambda s: s["tf"] > 0,
-                )
-            ).alias("_tc"),
+    stats = (
+        chunks.select(F.expr(_DL_SQL).alias("dl"), F.expr(hits_sql).alias("_h"))
+        .agg(
+            F.avg("dl").alias("avgdl"),
+            *[F.expr(idf_sql.format(t=t)).alias(f"idf{i}") for i, t in enumerate(terms)],
         )
-        .select(*_KEY, "dl", F.col("_tc.term").alias("term"), F.col("_tc.tf").alias("tf"))
+        .collect()[0]
     )
-    # index-wide df — from the UNfiltered tf relation
-    df_t = tf_full.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    if flt:
-        cand_keys = apply_metadata_filter(chunks, flt).select(*_KEY)
-        tf = tf_full.join(cand_keys, list(_KEY), "left_semi")
-    else:
-        tf = tf_full
-    idf = df_t.crossJoin(F.broadcast(stats)).select(
-        "term",
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        ).alias("idf"),
-        "avgdl",
-    )
-
-    scored = (
-        tf.join(F.broadcast(idf), "term")
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (
-                F.col("tf")
-                + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-            ),
-        )
-        .groupBy(*_KEY)
-        .agg(F.sum("term_score").alias("score"))
-    )
-    # top-k FIRST, then broadcast the ≤k winners back to fetch text: the
-    # score relation alone enters the sort-limit (per-partition top-k +
-    # driver merge), and the text join moves only k rows' keys instead of
-    # shuffling every chunk containing any query term (VERDICT r3 #5 —
-    # on a 100 TB chunks table with a common term that join was the
-    # dominant data motion)
-    topk = scored.orderBy(F.desc("score"), *_KEY).limit(k)
+    if stats["avgdl"] is None:  # no chunk has text: nothing can hit
+        return candidates.select(*_KEY, "text", F.lit(0.0).alias("score")).limit(0)
+    # pass 2: per-row score — tf per term from the row's hits, summed in
+    # term order from 0.0 like a sum() aggregate over per-term rows; the
+    # hits array and the length norm are let-bound (evaluated once per
+    # row); no hit → NULL score, which sorts last and is dropped
+    idfs = ",".join(f"{stats[f'idf{i}']!r}D" for i in range(len(terms)))
+    dl = f"CAST({_DL_SQL} AS DOUBLE)"
+    norm = f"(({1.0 - b!r}D + (({dl} * {b!r}D) / {stats['avgdl']!r}D)) * {k1!r}D)"
+    score_sql = f"""element_at(transform(
+        array(named_struct('h', {hits_sql}, 'n', {norm})),
+        s -> CASE WHEN size(s.h) > 0 THEN aggregate(
+          zip_with(
+            transform(array({",".join(f"'{t}'" for t in terms)}),
+                      t -> CAST(size(filter(s.h, x -> x = t)) AS DOUBLE)),
+            array({idfs}),
+            (tf, idf) -> CASE WHEN tf > 0 THEN (idf * (tf * {k1 + 1.0!r}D)) / (tf + s.n)
+                              ELSE 0.0D END),
+          0.0D, (acc, x) -> acc + x) END), 1)"""
     return (
-        chunks.select(*_KEY, "text")
-        .join(F.broadcast(topk), list(_KEY))
-        .select(*_KEY, "text", "score")
+        candidates.select(*_KEY, "text", F.expr(score_sql).alias("score"))
         .orderBy(F.desc("score"), *_KEY)
+        .limit(k)
+        .filter(F.col("score").isNotNull())
     )
+
+
+# ---------------------------------------------------------------------------
+# driver-side fusion core (Q4/Q5/Q7) over ≤pool-row lists
+# ---------------------------------------------------------------------------
+def _rrf(sem_keys: list, lex_keys: list, rrf_k: int, pool: int) -> list:
+    """[(key, fused_score)] by reciprocal rank: rank = position+1 in each
+    score-ordered list; fused = Σ 1/(rrf_k + rank); keep > 0; sort desc
+    (ties by key); take pool."""
+    fused: dict = {}
+    for ranked in (sem_keys, lex_keys):
+        for rank, key in enumerate(ranked, start=1):
+            fused[key] = fused.get(key, 0.0) + 1.0 / (rrf_k + rank)
+    out = sorted(((k, s) for k, s in fused.items() if s > 0.0), key=lambda ks: (-ks[1], ks[0]))
+    return out[:pool]
+
+
+def _fetch_texts(chunks: DataFrame, keys: list) -> dict:
+    """{key: text} for ``keys`` in ONE scan of ``chunks``, narrowed by
+    ``isin`` on both key columns (pushed to the parquet reader)."""
+    if not keys:
+        return {}
+    rows = (
+        chunks.filter(
+            F.col(_KEY[0]).isin(sorted({k[0] for k in keys}))
+            & F.col(_KEY[1]).isin(sorted({k[1] for k in keys}))
+        )
+        .select(*_KEY, "text")
+        .collect()
+    )
+    want = set(keys)
+    return {(r[0], r[1]): r[2] for r in rows if (r[0], r[1]) in want}
+
+
+def _resolve(fused: list, lex_text: dict, chunks: DataFrame) -> list:
+    """[(key, fused_score, text)]: text = lexical hit text if non-empty,
+    else chunk-table text; rows with no resolvable text are dropped."""
+    fetched = _fetch_texts(chunks, [k for k, _ in fused if not lex_text.get(k)])
+    out = []
+    for key, score in fused:
+        text = lex_text.get(key) or fetched.get(key)
+        if text is not None:
+            out.append((key, score, text))
+    return out
+
+
+def _gate(scored: list, limit: int) -> list:
+    """[(key, text, score)] after the rerank gates: reject ALL if
+    top < 0.3 or (top−worst) < 0.5; else keep score ≥ top − 0.2·(top−worst),
+    sorted desc, take limit.  A NULL or NaN score carries no ranking and
+    is dropped first."""
+    scored = [r for r in scored if r[2] is not None and r[2] == r[2]]
+    if not scored:
+        return []
+    top = max(r[2] for r in scored)
+    worst = min(r[2] for r in scored)
+    if top < MIN_ABSOLUTE_SCORE or top - worst < MIN_ACCEPTABLE_GAP:
+        return []
+    cut = top - RERANK_TOP_K_RATIO * (top - worst)
+    return sorted((r for r in scored if r[2] >= cut), key=lambda r: (-r[2], r[0]))[:limit]
+
+
+def _schema(df: DataFrame, key_cols, *rest: tuple) -> StructType:
+    """``df``'s key fields (their input types) followed by ``rest``."""
+    return StructType([df.schema[c] for c in key_cols] + [StructField(*f) for f in rest])
+
+
+def _ranked_keys(df: DataFrame, key_cols, pool: int) -> list:
+    return [
+        tuple(r)
+        for r in df.orderBy(F.desc("score"), *key_cols).limit(pool).select(*key_cols).collect()
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -280,36 +287,18 @@ def rrf_fuse(
     pool: int = FUSION_POOL_SIZE,
     key_cols: tuple[str, ...] = _KEY,
 ) -> DataFrame:
-    """Fuse two (key..., score) relations by reciprocal rank:
-    rank = position+1 by score desc; fused = Σ 1/(rrf_k + rank);
-    keep > 0; sort desc; take pool.
-
-    The ≤pool invariant is ENFORCED here (both inputs are sort-limited to
-    ``pool`` before ranking), so the global rank window is always bounded
-    — a caller passing an unlimited frame cannot trigger a single-task
-    sort of the world.  Note: Catalyst constant-folds the ``lit(0)``
-    partition key OUT of the executed window spec, so WindowExec still
-    logs its "No Partition Defined" warning — that warning is BENIGN here
-    (the input is already limited to ≤pool rows; one partition is the
-    point), and the ``.limit(pool)`` calls below are what actually bound
-    it.  The full-outer join broadcasts."""
-    semantic = semantic.orderBy(F.desc("score"), *key_cols).limit(pool)
-    lexical = lexical.orderBy(F.desc("score"), *key_cols).limit(pool)
-    w = Window.partitionBy(F.lit(0)).orderBy(F.desc("score"), *key_cols)
-    sem = semantic.select(*key_cols, F.row_number().over(w).alias("sem_rank"))
-    lex = lexical.select(*key_cols, F.row_number().over(w).alias("lex_rank"))
-    fused = (
-        sem.join(lex, list(key_cols), "full_outer")
-        .select(
-            *key_cols,
-            (
-                F.coalesce(1.0 / (F.lit(rrf_k) + F.col("sem_rank")), F.lit(0.0))
-                + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("lex_rank")), F.lit(0.0))
-            ).alias("fused_score"),
-        )
-        .filter(F.col("fused_score") > 0.0)
+    """Fuse two (key..., score) relations by reciprocal rank → (key...,
+    fused_score), fused desc.  Each input is sort-limited to ``pool``
+    in Spark before it is collected, so the driver-side fusion is
+    bounded whatever the caller passes."""
+    fused = _rrf(
+        _ranked_keys(semantic, key_cols, pool), _ranked_keys(lexical, key_cols, pool), rrf_k, pool
     )
-    return fused.orderBy(F.desc("fused_score"), *key_cols).limit(pool)
+    return local_frame(
+        semantic.sparkSession,
+        [(*k, s) for k, s in fused],
+        _schema(semantic, key_cols, ("fused_score", DoubleType())),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -318,23 +307,18 @@ def rrf_fuse(
 def resolve_candidate_texts(
     fused: DataFrame, lexical: DataFrame, chunks: DataFrame
 ) -> DataFrame:
-    """text = lexical hit text if non-empty else chunk-table text; rows
-    with no resolvable text are dropped.  fused/lexical are tiny
-    (≤ pool) → broadcast to the chunks join."""
-    lex_text = lexical.select(*_KEY, F.col("text").alias("lex_text"))
-    chunk_text = chunks.select(*_KEY, F.col("text").alias("chunk_text"))
-    return (
-        fused.join(F.broadcast(lex_text), list(_KEY), "left")
-        .join(chunk_text, list(_KEY), "left")
-        .select(
-            *_KEY,
-            "fused_score",
-            F.coalesce(
-                F.when(F.length("lex_text") > 0, F.col("lex_text")),
-                F.col("chunk_text"),
-            ).alias("text"),
-        )
-        .filter(F.col("text").isNotNull())
+    """(doc_id, segment_index, fused_score, text): text = lexical hit
+    text if non-empty else chunk-table text; rows with no resolvable
+    text are dropped.  ``fused`` and ``lexical`` are ≤pool lists."""
+    rows = _resolve(
+        [(tuple(r[:2]), r[2]) for r in fused.select(*_KEY, "fused_score").collect()],
+        {(r[0], r[1]): r[2] for r in lexical.select(*_KEY, "text").collect()},
+        chunks,
+    )
+    return local_frame(
+        fused.sparkSession,
+        [(*k, s, t) for k, s, t in rows],
+        _schema(fused, _KEY, ("fused_score", DoubleType()), ("text", StringType())),
     )
 
 
@@ -342,23 +326,16 @@ def resolve_candidate_texts(
 # Q7 — rerank result filtering (QueryService.scala:238-266)
 # ---------------------------------------------------------------------------
 def filter_reranked(scored: DataFrame, limit: int) -> DataFrame:
-    """Gates: reject ALL if top < 0.3 or (top−worst) < 0.5; else keep
-    score ≥ top − 0.2·(top−worst), sorted desc, take limit.  The
-    max/min stats are one broadcast row."""
-    stats = scored.agg(F.max("score").alias("top"), F.min("score").alias("worst"))
-    return (
-        scored.crossJoin(F.broadcast(stats))
-        .filter(
-            (F.col("top") >= MIN_ABSOLUTE_SCORE)
-            & ((F.col("top") - F.col("worst")) >= MIN_ACCEPTABLE_GAP)
-            & (
-                F.col("score")
-                >= F.col("top") - RERANK_TOP_K_RATIO * (F.col("top") - F.col("worst"))
-            )
-        )
-        .select(*_KEY, "text", "score")
-        .orderBy(F.desc("score"), *_KEY)
-        .limit(limit)
+    """(doc_id, segment_index, text, score) after the rerank gates
+    (:func:`_gate`) over a ≤pool candidate relation."""
+    rows = _gate(
+        [(tuple(r[:2]), r[2], r[3]) for r in scored.select(*_KEY, "text", "score").collect()],
+        limit,
+    )
+    return local_frame(
+        scored.sparkSession,
+        [(*k, t, s) for k, t, s in rows],
+        _schema(scored, _KEY, ("text", StringType()), ("score", DoubleType())),
     )
 
 
@@ -379,8 +356,10 @@ def retrieve_context(
     """embed query → vector top-200 ∥ BM25 top-200 → RRF → resolve text →
     rerank gate (≥5 candidates) → gated filter.
 
-    Returns (doc_id, segment_index, text, score).  The candidate count
-    gate is a driver-side branch, as in the reference (Q6).
+    Returns (doc_id, segment_index, text, score) as a local relation, key
+    columns typed as in ``chunks``.  The two top-200 lists are collected
+    and everything after them runs on the driver, as in the reference
+    (Q6's candidate count gate included).
 
     Fallback semantics (QueryService.scala:95-133): fusion-score results
     are returned when there are <5 candidates OR when the reranker FAILS
@@ -393,48 +372,44 @@ def retrieve_context(
     ``query_vec`` overrides the query embedding (default: the engine's
     embed function applied to the query text); ``rerank_col`` overrides
     the reranker with a Column scoring expression over the candidate
-    rows (doc_id, segment_index, text) — a deterministic rerank_col
-    makes the whole path oracle-checkable cross-engine.
+    rows (doc_id, segment_index, text), evaluated over a local relation
+    of the candidates — a deterministic rerank_col makes the whole path
+    oracle-checkable cross-engine.
 
     ``embed_fn`` / ``rerank_fn`` inject REAL models (batch-callable
     contract in functions.embedding): the query is embedded through the
     same ``embed_fn`` that produced the chunk vectors, and the rerank
-    stage batches candidate texts through ``rerank_fn``.  Defaults are
-    the deterministic stubs, so injection changes no oracle entry.
+    stage scores the candidate texts in one ``rerank_fn`` call.
+    Defaults are the deterministic stubs, so injection changes no oracle
+    entry.
     """
+    spark = chunks.sparkSession
     qvec = query_vec if query_vec is not None else embed_query(query_text, embed_fn)
-    semantic = cosine_topk(embeddings, qvec, FUSION_POOL_SIZE, flt)
-    lexical = bm25_topk(chunks, query_text, FUSION_POOL_SIZE, flt=flt)
-    fused = rrf_fuse(semantic, lexical)
-    candidates = resolve_candidate_texts(fused, lexical, chunks).cache()
+    sem = cosine_topk(embeddings, qvec, FUSION_POOL_SIZE, flt).select(*_KEY).collect()
+    lex = bm25_topk(chunks, query_text, FUSION_POOL_SIZE, flt=flt).collect()
+    fused = _rrf([tuple(r) for r in sem], [(r[0], r[1]) for r in lex], RRF_K, FUSION_POOL_SIZE)
+    cands = _resolve(fused, {(r[0], r[1]): r[2] for r in lex}, chunks)
+    schema = _schema(chunks, _KEY, ("text", StringType()), ("score", DoubleType()))
+    fusion = [(*k, t, s) for k, s, t in cands[:limit]]
+    if len(cands) < MIN_CANDIDATES_FOR_RERANK:
+        return local_frame(spark, fusion, schema)
     try:
-        n = candidates.count()
-        # every returned frame is MATERIALIZED (eager localCheckpoint of
-        # ≤limit rows) before candidates is unpersisted below — otherwise
-        # the caller's first action would re-execute the whole plan
-        # uncached, and a reranker failure at consumption time would
-        # escape the fusion fallback (ADVICE r2)
-        fusion_results = (
-            candidates.select(*_KEY, "text", F.col("fused_score").alias("score"))
-            .orderBy(F.desc("score"), *_KEY)
-            .limit(limit)
-        )
-        if n < MIN_CANDIDATES_FOR_RERANK:
-            return fusion_results.localCheckpoint(eager=True)
-        try:
-            score = (
-                rerank_col
-                if rerank_col is not None
-                else make_rerank_udf(query_text, rerank_fn)(F.col("text"))
+        if rerank_col is not None:
+            cand_schema = _schema(
+                chunks, _KEY, ("fused_score", DoubleType()), ("text", StringType())
             )
-            scored = candidates.select(*_KEY, "text", score.alias("score"))
-            # eager checkpoint forces the rerank UDF NOW, inside the try —
-            # the fallback decision is made on materialized results
-            return filter_reranked(scored, limit).localCheckpoint(eager=True)
-        except Exception:  # noqa: BLE001 — reranker failure → fusion fallback
-            return fusion_results.localCheckpoint(eager=True)
-    finally:
-        candidates.unpersist(blocking=False)
+            rows = (
+                local_frame(spark, [(*k, s, t) for k, s, t in cands], cand_schema)
+                .select(*_KEY, "text", rerank_col.cast("double").alias("score"))
+                .collect()
+            )
+            scored = [((r[0], r[1]), r[2], r[3]) for r in rows]
+        else:
+            scores = rerank_scores(query_text, [t for _, _, t in cands], rerank_fn)
+            scored = [(k, t, s) for (k, _, t), s in zip(cands, scores)]
+    except Exception:  # noqa: BLE001 — reranker failure → fusion fallback
+        return local_frame(spark, fusion, schema)
+    return local_frame(spark, [(*k, t, s) for k, t, s in _gate(scored, limit)], schema)
 
 
 # ---------------------------------------------------------------------------
@@ -459,5 +434,3 @@ def listing(
 
 # Q10 top-k and Q11 distinct are one-liners at call sites:
 #   df.orderBy(...).limit(k)        df.select("doc_id").distinct()
-def distinct_doc_ids(df: DataFrame) -> DataFrame:
-    return df.select("doc_id").distinct()

@@ -312,18 +312,6 @@ def repetition_stats(
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, ws_tokens, lex_tokens): whitespace tokens + BPE-ish
-    lowercase-alphanumeric pieces."""
-    ws = F.size(F.array_remove(F.split(F.col(text_col), r"\s+"), ""))
-    lex = F.size(F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""))
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        ws.cast("bigint").alias("ws_tokens"),
-        lex.cast("bigint").alias("lex_tokens"),
-    )
-
-
 def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_mins: int = 3) -> DataFrame:
     """(doc_id, full_md5, sketch): content fingerprint = md5 of the
     normalized text plus the ``n_mins`` lexicographically smallest shingle

@@ -5,8 +5,8 @@ The reference runs persist → embed → vector upsert → lexical
 delete+index per document, sequentially over HTTP; here the whole fan-out
 is one declarative plan over all documents at once.  The reference's
 "delete then index" idempotency (tolerated-failure delete,
-IndexingPipeline.scala:93-103) maps to overwrite-partition writes — a
-re-run converges to the same tables (J7).
+IndexingPipeline.scala:93-103) maps to ``SragEngine.ingest``'s keyed
+upserts of these plans — a re-run converges to the same tables (J7).
 """
 
 from __future__ import annotations
@@ -56,22 +56,3 @@ def build_embeddings(chunks: DataFrame, embed_fn=None) -> DataFrame:
         make_embed_udf(embed_fn)(F.col("text")).alias("vector"),
         "metadata",
     )
-
-
-def index_documents(
-    extracted: DataFrame,
-    chunks_path: str | None = None,
-    embeddings_path: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Full indexing fan-out.  When paths are given, writes both tables
-    (overwrite) and re-reads them (so downstream queries scan parquet with
-    pushdown rather than recomputing the UDF chain)."""
-    chunks = build_chunks(extracted)
-    if chunks_path:
-        chunks.write.mode("overwrite").parquet(chunks_path)
-        chunks = extracted.sparkSession.read.parquet(chunks_path)
-    embeddings = build_embeddings(chunks)
-    if embeddings_path:
-        embeddings.write.mode("overwrite").parquet(embeddings_path)
-        embeddings = extracted.sparkSession.read.parquet(embeddings_path)
-    return chunks, embeddings

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from srag_spark.functions.plan import local_frame
 from srag_spark.sources import fsio
 
 BUCKET_COL = "_kb"
@@ -184,10 +185,11 @@ def lookup_by_key(
 ) -> DataFrame:
     """Point lookup (S6) that PRUNES to the key buckets: the manifest's
     bucket layout (``pmod(xxhash64(key), n)``) is evaluated for the
-    requested key values in one single-row Spark job, and only those
-    buckets' dirs are scanned — a lookup on a 100 TB table reads
-    ~1/n_buckets of it (then parquet row-group stats narrow further),
-    instead of the full scan a plain ``read_table().filter()`` plans.
+    requested key values over a local relation (constant-folded on the
+    driver, no Spark job), and only those buckets' dirs are scanned — a
+    lookup on a 100 TB table reads ~1/n_buckets of it (then parquet
+    row-group stats narrow further), instead of the full scan a plain
+    ``read_table().filter()`` plans.
     Returns the matching rows (all rows of a multi-row key).  Keys are
     matched on the table's FIRST key column (the bucket column)."""
     manifest = read_manifest(spark, path, version=version)
@@ -196,12 +198,8 @@ def lookup_by_key(
     bcol = manifest["bucket_col"]
     n = manifest["n_buckets"]
     vals = sorted(set(values))
-    buckets = [
-        r[0]
-        for r in spark.createDataFrame([(v,) for v in vals], f"{bcol} string")
-        .select(_key_bucket(bcol, n))
-        .collect()
-    ]
+    keys = local_frame(spark, [(v,) for v in vals], StructType.fromDDL(f"{bcol} string"))
+    buckets = [r[0] for r in keys.select(_key_bucket(bcol, n)).collect()]
     return read_table(
         spark, path, buckets=sorted(set(buckets)), version=manifest["version"]
     ).filter(F.col(bcol).isin(vals))

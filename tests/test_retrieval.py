@@ -134,15 +134,19 @@ def test_bm25_matches_hand_scored_corpus(spark):
     chunks = spark.createDataFrame(
         [(d, s, t, None) for (d, s), t in corpus.items()], CHUNK_SCHEMA
     )
-    query = "quick fox"
-    got = {
-        (r["doc_id"], r["segment_index"]): r["score"]
-        for r in bm25_topk(chunks, query, k=10).collect()
-    }
-    exp = bm25_py(corpus, query)
-    assert got.keys() == exp.keys()
-    for k in exp:
-        assert got[k] == pytest.approx(exp[k])
+    for query in (
+        "quick fox",
+        "quick zebra",     # a term in no chunk (df = 0) scores nothing
+        "fox Quick fox",   # a repeated term counts once
+    ):
+        got = {
+            (r["doc_id"], r["segment_index"]): r["score"]
+            for r in bm25_topk(chunks, query, k=10).collect()
+        }
+        exp = bm25_py(corpus, query)
+        assert exp and got.keys() == exp.keys(), query
+        for k in exp:
+            assert got[k] == pytest.approx(exp[k]), query
 
 
 def test_bm25_regex_tf_edge_cases(spark):
@@ -200,8 +204,9 @@ def test_bm25_empty_query_matches_all_at_zero(spark):
     chunks = spark.createDataFrame(
         [("d1", 0, "alpha", None), ("d2", 0, "beta", None)], CHUNK_SCHEMA
     )
-    out = bm25_topk(chunks, "", k=10).collect()
-    assert sorted((r["doc_id"], r["score"]) for r in out) == [("d1", 0.0), ("d2", 0.0)]
+    for query in ("", " -- ,, !! "):  # no token at all
+        out = bm25_topk(chunks, query, k=10).collect()
+        assert sorted((r["doc_id"], r["score"]) for r in out) == [("d1", 0.0), ("d2", 0.0)]
 
 
 def test_lex_tokenizer():
@@ -234,6 +239,26 @@ def test_retrieve_context_empty_stores(spark):
 
 
 def test_retrieve_context_end_to_end(spark):
+    for id_type in ("string", "bigint"):
+        chunks, emb = _corpus_dfs(spark, id_type)
+        res = retrieve_context(chunks, emb, "spark documents", limit=3)
+        # key columns keep their input types
+        assert [(f.name, f.dataType.simpleString()) for f in res.schema.fields] == [
+            ("doc_id", id_type), ("segment_index", "int"), ("text", "string"), ("score", "double"),
+        ]
+        out = res.collect()
+        assert 0 < len(out) <= 3
+        # scores are the deterministic rerank stub (6 candidates ≥ gate of
+        # 5) or fusion fallback; either way text must resolve and order
+        # must be desc
+        scores = [r["score"] for r in out]
+        assert scores == sorted(scores, reverse=True)
+        assert all(r["text"] for r in out)
+        # a filter no chunk matches leaves both lists, and the result, empty
+        assert retrieve_context(chunks, emb, "spark documents", flt={"grp": "none"}).count() == 0
+
+
+def _corpus_dfs(spark, id_type="string"):
     corpus = {
         ("d1", 0): "spark engine parses documents into spans",
         ("d1", 1): "catalyst optimizes declarative plans",
@@ -242,43 +267,18 @@ def test_retrieve_context_end_to_end(spark):
         ("d3", 0): "the quick brown fox",
         ("d3", 1): "pages columns paragraphs sentences",
     }
+    if id_type == "bigint":
+        corpus = {(int(d[1:]), s): t for (d, s), t in corpus.items()}
     chunks = spark.createDataFrame(
-        [(d, s, t, None) for (d, s), t in corpus.items()], CHUNK_SCHEMA
+        [(d, s, t, None) for (d, s), t in corpus.items()],
+        CHUNK_SCHEMA.replace("doc_id string", f"doc_id {id_type}"),
     )
     emb = spark.createDataFrame(
         [
             (d, s, [float(x) for x in hash_embed(t)], None)
             for (d, s), t in corpus.items()
         ],
-        "doc_id string, segment_index int, vector array<float>, metadata map<string,string>",
-    )
-    out = retrieve_context(chunks, emb, "spark documents", limit=3).collect()
-    assert 0 < len(out) <= 3
-    # scores are the deterministic rerank stub (6 candidates ≥ gate of 5)
-    # or fusion fallback; either way text must resolve and order must be desc
-    scores = [r["score"] for r in out]
-    assert scores == sorted(scores, reverse=True)
-    assert all(r["text"] for r in out)
-
-
-def _corpus_dfs(spark):
-    corpus = {
-        ("d1", 0): "spark engine parses documents into spans",
-        ("d1", 1): "catalyst optimizes declarative plans",
-        ("d2", 0): "arrow batches move columns between workers",
-        ("d2", 1): "extraction keeps main content drops boilerplate",
-        ("d3", 0): "the quick brown fox",
-        ("d3", 1): "pages columns paragraphs sentences",
-    }
-    chunks = spark.createDataFrame(
-        [(d, s, t, None) for (d, s), t in corpus.items()], CHUNK_SCHEMA
-    )
-    emb = spark.createDataFrame(
-        [
-            (d, s, [float(x) for x in hash_embed(t)], None)
-            for (d, s), t in corpus.items()
-        ],
-        "doc_id string, segment_index int, vector array<float>, metadata map<string,string>",
+        f"doc_id {id_type}, segment_index int, vector array<float>, metadata map<string,string>",
     )
     return chunks, emb
 
@@ -349,6 +349,7 @@ def test_bm25_filter_restricts_results_without_changing_scores(spark):
     }
     # only group-a chunks survive, with their UNfiltered scores
     assert set(filtered) == {("d1", 0), ("d2", 0)}
+    assert bm25_topk(chunks, "quick fox", k=10, flt={"grp": "none"}).collect() == []
     for k, v in filtered.items():
         assert v == pytest.approx(unfiltered[k])
     # sanity: scoring over the filtered 2-doc subcorpus (the rejected

@@ -153,3 +153,21 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     # a 16x16-bin grid over the 64x64 domain → both spans ~16-32
     assert yr_z < 0.6 * yr_lex, (yr_z, yr_lex)
     assert xr_z < 40 and yr_z < 40, (xr_z, yr_z)
+
+
+def test_boundaries_and_zvalue_over_infinite_values(spark):
+    # ±Infinity values become quantile edges; the bin-search SQL must
+    # still parse and bin them in order, and a rel_err finer than the
+    # int accuracy bound of percentile_approx is clamped, not rejected
+    vals = [float("-inf")] * 6 + [float(i) for i in range(4)] + [float("inf")] * 6
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    for rel_err in (None, 1e-12):
+        edges = Z.compute_boundaries(df, ["x"], bits=2, rel_err=rel_err)["x"]
+        assert edges[0] == float("-inf") and edges[-1] == float("inf")
+        z = {
+            r["x"]: r["z"]
+            for r in df.select("x", Z.zvalue_col({"x": edges}, {"x": "double"}, bits=2).alias("z"))
+            .collect()
+        }
+        assert z[float("-inf")] <= z[0.0] <= z[3.0] < z[float("inf")]
+        assert z[float("inf")] == len(edges)
